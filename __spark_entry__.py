@@ -311,30 +311,46 @@ def _source_fingerprint(path: str) -> str:
     return f"{total}_{newest}"
 
 
+# Index cache prefixes name the on-disk layout: a cached index of an
+# older layout is evicted and rebuilt, never probed. The second entry
+# lists the prefixes of the layouts before it (the partitionBy
+# directory trees).
+ANN_CACHE = ("zs_ann_sorted", ("zs_ann_sketch_mt4",))
+IVF_CACHE = ("zs_ivf_sorted", ("zs_ivf",))
+
+
+def _index_cache_dir(sf_dir: str, cache: tuple[str, tuple[str, ...]]) -> str:
+    """Cache dir for an index over ``sf_dir``'s embeddings, keyed by
+    layout prefix and source-content fingerprint, so a changed
+    embeddings table or layout rebuilds instead of reusing a stale
+    index. Dirs of this sf_dir under older fingerprints or older
+    layout prefixes are evicted — every regeneration otherwise leaks a
+    full index copy into tmpfs RAM (ADVICE r3)."""
+    import glob as _glob
+    import shutil as _shutil
+
+    prefix, stale = cache
+    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
+    tag = sf_dir.strip("/").replace("/", "_")
+    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
+    idx_path = os.path.join(scratch, f"{prefix}_{tag}_{fp}")
+    for p in (prefix, *stale):
+        for old in _glob.glob(os.path.join(scratch, f"{p}_{tag}_*")):
+            if os.path.abspath(old) != os.path.abspath(idx_path):
+                _shutil.rmtree(old, ignore_errors=True)
+    return idx_path
+
+
 def ensure_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]]:
     """Build (or reuse) the persisted multi-table ANN sketch for
     ``sf_dir``'s embeddings; returns (index_path, query_vec of vec 0).
-    Cache key includes a source-content fingerprint, so a changed
-    embeddings table rebuilds instead of reusing a stale index.
     Called UNTIMED by bench.py prep — the sketch build is one-time
     index construction, not per-query work (judge round-2 item 1)."""
     from zensearch_spark.operators.similarity import build_ann_index
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    tag = sf_dir.strip("/").replace("/", "_")
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    idx_path = os.path.join(scratch, f"zs_ann_sketch_mt4_{tag}_{fp}")
-    # evict sketches of OLDER fingerprints of this same sf_dir — every
-    # regeneration otherwise leaks a full sketch copy into tmpfs RAM
-    # (ADVICE r3)
-    import glob as _glob
-    import shutil as _shutil
-
-    for old in _glob.glob(os.path.join(scratch, f"zs_ann_sketch_mt4_{tag}_*")):
-        if os.path.abspath(old) != os.path.abspath(idx_path):
-            _shutil.rmtree(old, ignore_errors=True)
+    idx_path = _index_cache_dir(sf_dir, ANN_CACHE)
     if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
         build_ann_index(emb, idx_path, dim=len(qvec), n_planes=8, n_tables=4)
     return idx_path, qvec
@@ -342,24 +358,15 @@ def ensure_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, list[float]
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str):
     """Build (or reuse) the IVF cell index + centroids for sf_dir's
-    embeddings (same cache discipline as ensure_ann_index: content
-    fingerprint key, stale dirs evicted, build untimed in bench)."""
+    embeddings (same cache discipline as ensure_ann_index, build
+    untimed in bench)."""
     import numpy as np
 
     from zensearch_spark.operators.ivf import build_ivf_index, train_ivf_centroids
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    scratch = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-    tag = sf_dir.strip("/").replace("/", "_")
-    fp = _source_fingerprint(f"{sf_dir}/embeddings.parquet")
-    idx_path = os.path.join(scratch, f"zs_ivf_{tag}_{fp}")
-    import glob as _glob
-    import shutil as _shutil
-
-    for old in _glob.glob(os.path.join(scratch, f"zs_ivf_{tag}_*")):
-        if os.path.abspath(old) != os.path.abspath(idx_path):
-            _shutil.rmtree(old, ignore_errors=True)
+    idx_path = _index_cache_dir(sf_dir, IVF_CACHE)
     cent_path = os.path.join(idx_path, "centroids.npy")
     if not os.path.exists(os.path.join(idx_path, "cells", "_SUCCESS")):
         cent = train_ivf_centroids(emb, n_centroids=64, sample_every=4, seed=42)
@@ -372,8 +379,8 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows-only by design (k-means centroids are a driver fit no SQL
     # mirror reproduces; the IVF mechanism is hash-checked by
     # ivf_recall). The IVF (coarse-quantizer) twin of ann_topk: scan
-    # only the nprobe nearest cells via partition pruning, exact
-    # re-rank inside.
+    # only the nprobe nearest cells via a pushed-down centroid_id
+    # filter (row-group pruning), exact re-rank inside.
     from zensearch_spark.operators.ivf import ivf_topk
 
     cells, cent, qvec = ensure_ivf_index(spark, sf_dir)
@@ -382,9 +389,11 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle-checked since round 5: _ann_topk_sql recomputes the whole
-    # sketch pipeline from plane literals. Exercises the PRODUCTION shape: sketch table built once in ONE
-    # scan (partitionBy table_id+bucket), probes read only their
-    # buckets via partition pruning.
+    # sketch pipeline from plane literals. Exercises the PRODUCTION
+    # shape: sketch table built once in ONE scan, written as a few
+    # files sorted on (table_id, bucket); a probe reads the index root
+    # with a pushed-down (table_id, bucket) filter and row-group
+    # statistics skip the unprobed buckets.
     from zensearch_spark.operators.similarity import ann_topk_indexed
 
     idx_path, qvec = ensure_ann_index(spark, sf_dir)
@@ -395,8 +404,8 @@ def _q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle-checked since round 5 (_ann_topk_batch_sql). The
-    # throughput shape: 8 probe queries share one Spark job and one
-    # bucket-pruned scan (vector twin of wand_topk_batch).
+    # throughput shape: 8 probe queries share one bucket-pruned scan
+    # and one vectorized re-rank pass (vector twin of wand_topk_batch).
     from zensearch_spark.operators.similarity import ann_topk_batch
 
     idx_path, _ = ensure_ann_index(spark, sf_dir)

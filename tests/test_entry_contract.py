@@ -65,3 +65,33 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert "doc_id" in df.columns and "score" in df.columns
+
+
+def test_index_cache_evicts_other_layouts_and_fingerprints(tmp_path):
+    """An index cached under an older layout prefix or an older source
+    fingerprint of the same sf_dir is evicted, never reused; another
+    sf_dir's cache is left alone."""
+    import os
+    import shutil
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    with open(os.path.join(sf_dir, "embeddings.parquet"), "wb") as f:
+        f.write(b"x")
+    path = entrymod._index_cache_dir(sf_dir, entrymod.ANN_CACHE)
+    scratch, name = os.path.split(path)
+    tag = sf_dir.strip("/").replace("/", "_")
+    prefix, (old_prefix,) = entrymod.ANN_CACHE
+    stale = [os.path.join(scratch, f"{old_prefix}_{tag}_1_2"),
+             os.path.join(scratch, f"{prefix}_{tag}_1_2")]
+    other = os.path.join(scratch, f"{old_prefix}_{tag}x_1_2")
+    try:
+        for d in [*stale, other, path]:
+            os.makedirs(d)
+        assert name.startswith(f"{prefix}_{tag}_")
+        assert entrymod._index_cache_dir(sf_dir, entrymod.ANN_CACHE) == path
+        assert os.path.isdir(path) and os.path.isdir(other)
+        assert not any(os.path.exists(d) for d in stale)
+    finally:
+        for d in [*stale, other, path]:
+            shutil.rmtree(d, ignore_errors=True)

@@ -6,18 +6,19 @@ LSH-bucketed variant as the scale path").
 Shape: a small deterministic k-means (driver-side NumPy over a
 bounded sample — centroids are MODEL parameters, like the LSH planes)
 partitions vectors into n_centroids cells; the index is the
-embeddings table written partitionBy(centroid_id); a probe ranks
-centroids against the query driver-side and scans only the top
-``nprobe`` cells (literal partition filter → partition pruning, same
-plan shape as the LSH sketch probe). Exact cosine re-rank inside the
-probed cells.
+embeddings table written sorted on centroid_id in a few parquet files
+(similarity.write_sorted_index); a probe ranks centroids against the
+query driver-side and reads the index root with a pushed-down
+``centroid_id IN (...)`` filter over the top ``nprobe`` cells, so
+row-group statistics skip the other cells (same plan shape as the LSH
+sketch probe). Exact cosine re-rank inside the probed cells.
 
 Scale: assignment is one scan with an Arrow-batched matmul+argmax
 (batch_rows × n_centroids GEMM — no per-row Python); the write is
-one shuffle by centroid_id; a probe reads nprobe/n_centroids of the
-data. Recall is data-dependent (gated on clustered fixtures like the
-LSH tests; i.i.d. gaussian data defeats any sub-linear ANN — same
-honest floor the LSH tests document).
+one range shuffle by centroid_id; a probe reads the row groups of
+its nprobe cells. Recall is data-dependent (gated on clustered
+fixtures like the LSH tests; i.i.d. gaussian data defeats any
+sub-linear ANN — same honest floor the LSH tests document).
 """
 
 from __future__ import annotations
@@ -28,7 +29,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from zensearch_spark.operators.similarity import cosine_topk
+from zensearch_spark.operators.similarity import cosine_topk, write_sorted_index
+
+# read with its schema given, as similarity.ANN_INDEX_SCHEMA is
+IVF_INDEX_SCHEMA = "vec_id bigint, embedding array<double>, centroid_id int"
 
 
 def train_ivf_centroids(
@@ -160,17 +164,12 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the IVF cells: one scan + one shuffle by
-    centroid_id, written partitionBy(centroid_id) so probes prune to
-    their cells' files (snappy for the same writer-init reason as the
-    LSH sketch write)."""
-    (
-        assign_centroids(emb, centroids, id_col, vec_col)
-        .repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .option("compression", "snappy")
-        .parquet(out_path)
+    """Materialize the IVF cells: one scan + one range shuffle by
+    centroid_id, written sorted on centroid_id (write_sorted_index) so
+    a probe's cell filter skips the other cells' row groups."""
+    write_sorted_index(
+        assign_centroids(emb, centroids, id_col, vec_col), out_path,
+        ["centroid_id"],
     )
 
 
@@ -194,19 +193,14 @@ def ivf_topk(
     k: int = 20,
     nprobe: int = 8,
 ) -> DataFrame:
-    """Approximate top-k: scan only the nprobe nearest cells. Round
-    6: the probed cells are read as direct partition paths, so the
-    driver lists nprobe dirs instead of discovering all n_centroids
-    partitions per query (same pruning, listing ∝ probe set)."""
-    import os
-
+    """Approximate top-k over an index written by build_ivf_index:
+    scan only the nprobe nearest cells, through a
+    ``centroid_id IN (...)`` filter pushed down to the parquet
+    reader."""
     cells = probe_cells(centroids, query_vec, nprobe)
-    paths = [
-        p for c in cells
-        if os.path.isdir(p := os.path.join(index_path, f"centroid_id={c}"))
-    ]
-    if not paths:
-        return spark.createDataFrame([], "vec_id bigint, cosine double")
-    cand = spark.read.option("basePath", index_path).parquet(*paths)
+    cand = (
+        spark.read.schema(IVF_INDEX_SCHEMA).parquet(index_path)
+        .filter(F.col("centroid_id").isin(cells))
+    )
     return cosine_topk(cand, query_vec, k=k, id_col="vec_id",
                        vec_col="embedding")

@@ -4,10 +4,20 @@ Brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
 (random-hyperplane / sign-sketch) variant as the scale path: at 100 TB
 the brute force is a full scan per probe; the sketch turns it into a
 bucket-pruned scan with exact re-rank inside candidate buckets.
-All JVM column algebra (F.zip_with / F.aggregate) — no Python UDF.
+
+The sketch index is a few parquet files sorted on (table_id, bucket)
+(write_sorted_index). A probe reads the index root with an ordinary
+pushed-down (table_id, bucket) filter, so row-group statistics skip
+unprobed buckets, and re-ranks each Arrow batch of candidates against
+the whole query set as one NumPy matmul (ann_topk_batch). The
+Catalyst folds (_dot/_norm) remain for the pure-DataFrame cross-check
+paths.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 import numpy as np
 import pandas as pd
@@ -164,6 +174,36 @@ def probe_buckets(
     return sorted(probes)
 
 
+# ~1 MB row groups: the unit a probe's pushed-down filter skips by its
+# footer min/max statistics
+ROW_GROUP_BYTES = 1 << 20
+# Probes read an index with its schema given, not inferred: inference
+# runs a Spark job per read, which costs a small probe about as much
+# as its own scan. Embeddings come back as float64 whatever width they
+# were stored at (Spark widens a parquet float to double exactly), and
+# the kernels compute in float64 anyway.
+ANN_INDEX_SCHEMA = "vec_id bigint, embedding array<double>, table_id int, bucket bigint"
+
+
+def write_sorted_index(df: DataFrame, out_path: str, keys: list[str]) -> None:
+    """Write an index table as defaultParallelism parquet files,
+    range-partitioned and sorted on ``keys``, in ~ROW_GROUP_BYTES row
+    groups with the session's codec. Each file and each row group
+    then covers a narrow key range, so a probe reads the index root
+    with an ordinary filter on ``keys`` and the parquet reader skips
+    the row groups whose footer min/max miss it — the blocks table's
+    term-sorted pattern (PLANS.md). Nothing is laid out per key value:
+    no directory tree to list and one writer per task."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    (
+        df.repartitionByRange(par, *keys)
+        .sortWithinPartitions(*keys)
+        .write.mode("overwrite")
+        .option("parquet.block.size", ROW_GROUP_BYTES)
+        .parquet(out_path)
+    )
+
+
 def build_ann_index(
     emb: DataFrame,
     out_path: str,
@@ -174,24 +214,21 @@ def build_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize a MULTI-TABLE sign-sketch index ONCE, written
-    partitionBy(table_id, bucket) so a probe reads only its buckets'
-    files (the pruned-partition pattern the posting blocks use with
-    term_bucket). L independent tables are the standard LSH recall
-    lever — a neighbor is found if it collides in ANY table
+    """Materialize a MULTI-TABLE sign-sketch index ONCE as
+    (table_id, bucket, vec_id, embedding) rows, written sorted on
+    (table_id, bucket) by write_sorted_index, so a probe's
+    (table_id, bucket) filter skips the row groups of unprobed buckets.
+    L independent tables are the standard LSH recall lever — a
+    neighbor is found if it collides in ANY table
     (recall = 1-(1-p)^L) — and each table's probe set stays tiny.
 
     ONE scan of the embeddings table computes all L bucket columns
     (they are all projections of the same row), then stack() fans
-    them out to (table_id, bucket) rows — the round-2 shape (one
-    hyperplane_sketch scan per table, unioned) read the table L
-    times, which at 100 TB makes the build L× the dominant cost.
-    Round 6: all n_tables · n_planes sign dots per row are ONE Arrow
-    matmul (batch × dim) @ (dim × T·planes) in a pandas UDF instead of
-    interpreted zip_with folds — bucket values verified identical to
-    the fold path on the driver corpora (sign of a float64 dot; both
-    orders agree except on exact-zero dots, measure-zero here and
-    already the documented caveat of the ANN oracle)."""
+    them out to (table_id, bucket) rows. All n_tables · n_planes sign
+    dots per row are ONE Arrow matmul (batch × dim) @ (dim × T·planes)
+    in a pandas UDF (sign of a float64 dot; the fold and matmul orders
+    agree except on exact-zero dots, measure-zero here and already the
+    documented caveat of the ANN oracle)."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -228,51 +265,16 @@ def build_ann_index(
         "embedding",
         F.expr(f"stack({n_tables}, {stack_args}) AS (table_id, bucket)"),
     )
-    (
-        fanned.repartition("table_id", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("table_id", "bucket")
-        # snappy, not the session's zstd: the write opens one file per
-        # (table_id, bucket) dir — n_tables·2^n_planes writer inits —
-        # and zstd context setup dominates them; the float embedding
-        # payload barely compresses either way
-        .option("compression", "snappy")
-        .parquet(out_path)
-    )
+    write_sorted_index(fanned, out_path, ["table_id", "bucket"])
 
 
-def _probe_condition(
-    query_vec: list[float], n_planes: int, probe_hamming: int, seed: int,
-    n_tables: int,
-):
-    cond = None
-    for t in range(n_tables):
-        probes = probe_buckets(query_vec, n_planes, probe_hamming, seed, table=t)
-        c = (F.col("table_id") == t) & F.col("bucket").isin(probes)
-        cond = c if cond is None else (cond | c)
-    return cond
-
-
-def _read_probe_dirs(spark, index_path: str, by_table: dict[int, set[int]]):
-    """Read ONLY the probed (table_id, bucket) partition dirs (round
-    6): listing cost becomes proportional to the PROBE SET instead of
-    the whole 2^n_planes·L directory tree — the driver-side face of
-    partition pruning (the filter-on-full-index shape paid a full
-    partition discovery per query; measured 2.2 s on the 1024-dir
-    sketch). Missing dirs are empty buckets and are skipped; returns
-    None when no probed bucket exists (caller yields zero
-    candidates)."""
-    import os
-
-    paths = []
-    for t, buckets in sorted(by_table.items()):
-        for b in sorted(buckets):
-            p = os.path.join(index_path, f"table_id={t}", f"bucket={b}")
-            if os.path.isdir(p):
-                paths.append(p)
-    if not paths:
-        return None
-    return spark.read.option("basePath", index_path).parquet(*paths)
+def _probe_filter(by_table: dict[int, set[int]]) -> F.Column:
+    """(table_id = t AND bucket IN probes_t) OR ... — pushed down to
+    the parquet reader, where row-group statistics do the pruning."""
+    return functools.reduce(operator.or_, [
+        (F.col("table_id") == t) & F.col("bucket").isin(sorted(b))
+        for t, b in sorted(by_table.items())
+    ])
 
 
 def ann_topk_indexed(
@@ -285,33 +287,13 @@ def ann_topk_indexed(
     probe_hamming: int = 1,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate NN over the PERSISTED multi-table sketch:
-    partition-prune to each table's probe buckets, dedupe candidates
-    across tables, exact-cosine re-rank. The (table_id, bucket)
-    predicate is a partition filter (PLANS.md shows PartitionFilters
-    on this scan) — unprobed buckets are never read."""
-    by_table = {
-        t: set(probe_buckets(query_vec, n_planes, probe_hamming, seed, table=t))
-        for t in range(n_tables)
-    }
-    src = _read_probe_dirs(spark, index_path, by_table)
-    if src is None:
-        return spark.createDataFrame([], "vec_id bigint, cosine double")
-    cand = src.select("vec_id", "embedding")
-    # Round 6: score BEFORE deduping and dedupe with a hash-aggregable
-    # max over the (identical) per-copy cosines — dropDuplicates on a
-    # row carrying the embedding array forced a SortAggregate +
-    # array-typed first() in the round-5 plan. Same result: every
-    # cross-table copy of a vec_id scores identically.
-    raw = _cosine_lit(F.col("embedding"), query_vec)
-    return (
-        cand.select("vec_id", raw.alias("_raw"))
-        .groupBy("vec_id")
-        .agg(F.max("_raw").alias("_raw"))
-        .orderBy(F.desc("_raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("_raw", 6).alias("cosine"))
-    )
+    """Approximate NN over the PERSISTED multi-table sketch: a batch
+    of one through ann_topk_batch (as wand_topk is over its batch).
+    Returns (vec_id, cosine) in rank order."""
+    return ann_topk_batch(
+        spark, index_path, [(0, query_vec, k)], n_planes=n_planes,
+        n_tables=n_tables, probe_hamming=probe_hamming, seed=seed,
+    ).select("vec_id", "cosine")
 
 
 def embedding_neardup_pairs(
@@ -378,7 +360,7 @@ def _pack_blocks(
         ]
     )
 
-    def pack(key, pdf: pd.DataFrame):
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vid"].to_numpy(np.int64)
         mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
         mat /= np.linalg.norm(mat, axis=1, keepdims=True)
@@ -663,6 +645,16 @@ def embedding_neardup_lsh(
     )
 
 
+def _topk_distinct(vid: np.ndarray, raw: np.ndarray, k: int):
+    """The ``k`` best DISTINCT ids by (raw desc, id asc); of an id's
+    copies the highest raw is kept."""
+    order = np.lexsort((vid, -raw))
+    vid, raw = vid[order], raw[order]
+    _, first = np.unique(vid, return_index=True)
+    keep = np.sort(first)[:k]
+    return vid[keep], raw[keep]
+
+
 def ann_topk_batch(
     spark,
     index_path: str,
@@ -672,61 +664,89 @@ def ann_topk_batch(
     probe_hamming: int = 1,
     seed: int = 42,
 ) -> DataFrame:
-    """Whole query set over the persisted sketch in ONE Spark job —
-    the vector twin of the WAND batch evaluator (operators/wand.py
-    wand_topk_batch): probe q/s becomes a throughput number instead
-    of a per-job-overhead number.
-
-    ``queries`` = [(query_id, query_vec, k)]. Plan: the UNION of all
-    queries' probe buckets forms one literal partition filter (files
-    of unprobed buckets are never read), a broadcast (query_id,
-    table_id, bucket) map re-associates candidates to queries, and a
-    broadcast (query_id, qvec, k) row supplies the per-query vector
-    for the exact-cosine re-rank + per-query window top-k. Returns
+    """Whole query set over the persisted sketch as ONE scan and one
+    vectorized pass — the vector twin of the WAND batch evaluator
+    (operators/wand.py wand_topk_batch). ``index_path`` holds an
+    index written by build_ann_index (read as ANN_INDEX_SCHEMA);
+    ``queries`` = [(query_id, query_vec, k)]; returns
     (query_id, vec_id, cosine) ordered by (query_id, rank).
-    """
-    from pyspark.sql import Window
 
-    probe_rows: list[tuple[int, int, int]] = []
+    Plan: the index root is read with the UNION of all queries' probe
+    buckets as one pushed-down filter (row-group statistics skip the
+    rest), feeding one mapInPandas. The query matrix and a
+    (table_id << n_planes | bucket) × query membership table ship in
+    its closure, so each Arrow batch is one (rows × |Q|) float64
+    matmul masked to the pairs whose bucket the query probes, and each
+    partition keeps its per-query distinct top-k. That is exact: a
+    vector in the global top-k is in the local top-k of every
+    partition holding a copy. One single-partition mapInPandas then
+    dedupes the copies, ranks and cuts each query to its k. No join,
+    aggregate, window or range sort — per-job and per-batch costs at
+    the Python boundary, not arithmetic, are what a batch pays for."""
+    qids = [int(q) for q, _, _ in queries]
+    ks = {int(q): int(k) for q, _, k in queries}
+    qm = np.stack([np.asarray(v, dtype=np.float64) for _, v, _ in queries])
+    qn = np.sqrt((qm * qm).sum(axis=1))
+    member: dict[int, np.ndarray] = {}
     by_table: dict[int, set[int]] = {t: set() for t in range(n_tables)}
-    qrows = []
-    for qid, vec, k in queries:
-        qrows.append((int(qid), [float(x) for x in vec], int(k)))
+    for j, (_, vec, _) in enumerate(queries):
         for t in range(n_tables):
             for b in probe_buckets(vec, n_planes, probe_hamming, seed, table=t):
-                probe_rows.append((int(qid), t, int(b)))
-                by_table[t].add(int(b))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id int, table_id int, bucket bigint"
-    )
-    qdf = spark.createDataFrame(qrows, "query_id int, qvec array<double>, k int")
-    # Round 6: (a) read only the probed partition dirs (listing ∝
-    # probe set — _read_probe_dirs); (b) score each candidate COPY
-    # first (Arrow matmul — cheap), then collapse (query_id, vec_id)
-    # duplicates with a hash-aggregable max instead of dropDuplicates
-    # over rows that carry the embedding array (array-typed first()
-    # forced SortAggregate). Copies of a vec_id score identically, so
-    # the result is the same.
-    src = _read_probe_dirs(spark, index_path, by_table)
-    if src is None:
-        return spark.createDataFrame(
-            [], "query_id int, vec_id bigint, cosine double"
-        )
-    cand = (
-        src
-        .withColumn("bucket", F.col("bucket").cast("bigint"))
-        .join(F.broadcast(probes), ["table_id", "bucket"])
-        .join(F.broadcast(qdf), "query_id")
-    )
-    raw = _cosine_pair(F.col("embedding"), F.col("qvec"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_raw"), F.asc("vec_id"))
+                by_table[t].add(b)
+                key = (t << n_planes) | b
+                member.setdefault(key, np.zeros(len(qids), dtype=bool))[j] = True
+    keys = np.asarray(sorted(member), dtype=np.int64)
+    probes = np.stack([member[int(x)] for x in keys])  # (|keys|, |Q|)
+    schema = "query_id int, vec_id bigint, _raw double"
+
+    def local_topk(batches):
+        best = [(np.empty(0, np.int64), np.empty(0)) for _ in qids]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            key = (pdf["table_id"].to_numpy(np.int64) << n_planes) | pdf[
+                "bucket"
+            ].to_numpy(np.int64)
+            # every row passed the probe filter, so its key is in keys
+            hit = probes[np.searchsorted(keys, key)]  # (rows, |Q|)
+            m = _stack64(pdf["embedding"].to_numpy())
+            cos = (m @ qm.T) / (
+                np.sqrt((m * m).sum(axis=1))[:, None] * qn[None, :]
+            )
+            vid = pdf["vec_id"].to_numpy(np.int64)
+            for j, q in enumerate(qids):
+                rows = hit[:, j]
+                best[j] = _topk_distinct(
+                    np.concatenate([best[j][0], vid[rows]]),
+                    np.concatenate([best[j][1], cos[rows, j]]),
+                    ks[q],
+                )
+        yield pd.DataFrame({
+            "query_id": np.repeat(
+                np.asarray(qids, dtype=np.int32), [len(v) for v, _ in best]
+            ),
+            "vec_id": np.concatenate([v for v, _ in best]),
+            "_raw": np.concatenate([r for _, r in best]),
+        })
+
+    def merge(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True).sort_values(
+            ["query_id", "_raw", "vec_id"], ascending=[True, False, True]
+        ).drop_duplicates(["query_id", "vec_id"])
+        rank = pdf.groupby("query_id").cumcount()
+        yield pdf[rank < pdf["query_id"].map(ks)]
+
     return (
-        cand.select("query_id", "vec_id", "k", raw.alias("_raw"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.max("_raw").alias("_raw"), F.first("k").alias("k"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= F.col("k"))
-        .orderBy("query_id", "rn")
+        spark.read.schema(ANN_INDEX_SCHEMA).parquet(index_path)
+        .filter(_probe_filter(by_table))
+        .select("table_id", "bucket", "vec_id", "embedding")
+        .mapInPandas(local_topk, schema)
+        .repartition(1)
+        .mapInPandas(merge, schema)
+        # rounded in the JVM, like every other cosine surface
         .select("query_id", "vec_id", F.round("_raw", 6).alias("cosine"))
     )
 

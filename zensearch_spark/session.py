@@ -127,12 +127,15 @@ def get_spark(
         # standard remedy for long-GC executors.
         .config("spark.network.timeout", "600s")
         .config("spark.executor.heartbeatInterval", "60s")
-        # Partition discovery above this many paths launches a Spark
-        # JOB to list directories — measured 2.2 s per read of the
-        # 1024-dir ANN sketch on local tmpfs vs 0.33 s serial (the
-        # job pays scheduling, not I/O). Local FS listing is cheap,
-        # so raise the threshold; on object stores with very wide
-        # tables the parallel listing wins — set the env there.
+        # Partition discovery above this many paths (Spark default 32)
+        # launches a Spark JOB to list directories — the job pays
+        # scheduling, not I/O (measured 2.2 s vs 0.33 s serial on a
+        # 1024-dir tree on local tmpfs). The ANN/IVF indexes are now a
+        # few sorted files with no directory tree, so only a wide
+        # partitionBy table (e.g. > 32 term_bucket dirs of the blocks
+        # table) reaches the threshold. Local FS listing is cheap, so
+        # keep it high; on object stores with very wide tables the
+        # parallel listing wins — set the env there.
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "4096"),
