@@ -14,6 +14,8 @@ the test asserts a documented, weaker floor instead of pretending.
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -120,6 +122,23 @@ def _row_groups(index_path: str, keys: tuple[str, ...]):
     return out
 
 
+@contextlib.contextmanager
+def _statistics_only(spark):
+    """Parquet reads planned inside drop row groups by footer min/max
+    alone: the dictionary filter is off."""
+    key = "parquet.filter.dictionary.enabled"
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = conf.get(key)
+    conf.set(key, "false")
+    try:
+        yield
+    finally:
+        if old is None:
+            conf.unset(key)
+        else:
+            conf.set(key, old)
+
+
 def _in_range(lo_hi, wanted) -> bool:
     """The statistics filter: can a row group whose column spans
     [min, max] hold one of ``wanted``?"""
@@ -215,40 +234,60 @@ def test_ann_probe_scan_prunes_partitions(spark, clustered, clustered_sketch):
     row-group statistics. So the scan must output exactly the rows of
     the row groups that neither the footer min/max (some table t in
     [min, max] of table_id with one of t's probed buckets in [min, max]
-    of bucket) nor the row group's dictionary rules out, and the
-    footer bound alone must already be strictly fewer rows than the
-    index holds."""
-    from zensearch_spark.operators.similarity import ann_topk_indexed, probe_buckets
+    of bucket) nor the row group's dictionary rules out; with the
+    dictionary filter off, exactly the rows the footer min/max leave;
+    and that must be strictly fewer rows than the index holds.
+    Checked for a single probe and for batches of 2 and 4 queries,
+    whose union of probes per table exceeds Spark's default
+    spark.sql.parquet.pushdown.inFilterThreshold of 10."""
+    from zensearch_spark.operators.similarity import (
+        ann_topk_batch, ann_topk_indexed, probe_buckets,
+    )
 
-    q = _qvec(clustered, 0)
-    probes = {
-        t: probe_buckets(q, n_planes=8, probe_hamming=1, table=t)
-        for t in range(4)
-    }
-    # 9 ≤ spark.sql.parquet.pushdown.inFilterThreshold: each IN reaches
-    # parquet as a value set, not widened to its [min, max] range
-    assert all(len(b) == 9 for b in probes.values())
     groups = _row_groups(clustered_sketch, ("table_id", "bucket"))
     assert len(groups) > 4, "fixture must span several row groups"
-
-    def matches(may) -> bool:
-        return any(may("table_id", [t]) and may("bucket", bs)
-                   for t, bs in probes.items())
-
-    # the statistics and the dictionary filter each drop a row group
-    # when no (table t, probed bucket of t) can be in it
     total = sum(n for n, _, _ in groups)
-    by_footer = sum(n for n, st, _ in groups
-                    if matches(lambda c, w: _in_range(st[c], w)))
-    expected = sum(n for n, st, v in groups
-                   if matches(lambda c, w: _in_range(st[c], w))
-                   and matches(lambda c, w: _in_dict(v[c], w)))
-    rows, scanned = _scan_output_rows(
-        spark, ann_topk_indexed(spark, clustered_sketch, q, k=5)
-    )
-    assert rows, "probe returned no rows"
-    assert scanned == expected, (scanned, expected, by_footer, total)
-    assert scanned <= by_footer < total, (scanned, by_footer, total)
+    in_max = int(spark.conf.get("spark.sql.parquet.pushdown.inFilterThreshold"))
+    for vids in ((0,), (0, 1), (0, 1, 2, 3)):
+        qs = [_qvec(clustered, v) for v in vids]
+        probes = {
+            t: set().union(*[
+                probe_buckets(q, n_planes=8, probe_hamming=1, table=t)
+                for q in qs
+            ])
+            for t in range(4)
+        }
+        # past 10 values only the session's raised threshold keeps an
+        # IN list testable value by value against the footers
+        assert all((len(b) > 10) == (len(vids) > 1) and len(b) <= in_max
+                   for b in probes.values()), (vids, in_max, probes)
+
+        def matches(may) -> bool:
+            return any(may("table_id", [t]) and may("bucket", bs)
+                       for t, bs in probes.items())
+
+        # the statistics and the dictionary filter each drop a row group
+        # when no (table t, probed bucket of t) can be in it
+        by_footer = sum(n for n, st, _ in groups
+                        if matches(lambda c, w: _in_range(st[c], w)))
+        expected = sum(n for n, st, v in groups
+                       if matches(lambda c, w: _in_range(st[c], w))
+                       and matches(lambda c, w: _in_dict(v[c], w)))
+        assert by_footer < total, (vids, by_footer, total)
+
+        def probe():
+            if len(qs) == 1:
+                return ann_topk_indexed(spark, clustered_sketch, qs[0], k=5)
+            return ann_topk_batch(spark, clustered_sketch,
+                                  [(j, q, 5) for j, q in enumerate(qs)])
+
+        rows, scanned = _scan_output_rows(spark, probe())
+        assert len(rows) == 5 * len(qs), (vids, len(rows))
+        assert scanned == expected, (vids, scanned, expected, by_footer, total)
+        with _statistics_only(spark):
+            rows, scanned = _scan_output_rows(spark, probe())
+        assert len(rows) == 5 * len(qs), (vids, len(rows))
+        assert scanned == by_footer, (vids, scanned, by_footer, total)
 
 
 def test_embedding_neardup_lsh_vs_exact(spark, clustered):
@@ -473,21 +512,29 @@ def test_ivf_probe_prunes_partitions(spark, clustered, ivf_index):
 
     path, cent = ivf_index
     q = _qvec(clustered, 0)
-    cells = probe_cells(cent, q, nprobe=3)
     groups = _row_groups(path, ("centroid_id",))
     assert len(groups) > 3, "fixture must span several row groups"
     total = sum(n for n, _, _ in groups)
-    by_footer = sum(n for n, st, _ in groups
-                    if _in_range(st["centroid_id"], cells))
-    expected = sum(n for n, st, v in groups
-                   if _in_range(st["centroid_id"], cells)
-                   and _in_dict(v["centroid_id"], cells))
-    rows, scanned = _scan_output_rows(
-        spark, ivf_topk(spark, path, cent, q, k=5, nprobe=3)
-    )
-    assert rows, "probe returned no rows"
-    assert scanned == expected, (scanned, expected, by_footer, total)
-    assert scanned <= by_footer < total, (scanned, by_footer, total)
+    # 12 cells exceed Spark's default inFilterThreshold of 10
+    for nprobe in (3, 12):
+        cells = probe_cells(cent, q, nprobe=nprobe)
+        by_footer = sum(n for n, st, _ in groups
+                        if _in_range(st["centroid_id"], cells))
+        expected = sum(n for n, st, v in groups
+                       if _in_range(st["centroid_id"], cells)
+                       and _in_dict(v["centroid_id"], cells))
+        assert by_footer < total, (nprobe, by_footer, total)
+        rows, scanned = _scan_output_rows(
+            spark, ivf_topk(spark, path, cent, q, k=5, nprobe=nprobe)
+        )
+        assert rows, "probe returned no rows"
+        assert scanned == expected, (nprobe, scanned, expected, by_footer, total)
+        with _statistics_only(spark):
+            rows, scanned = _scan_output_rows(
+                spark, ivf_topk(spark, path, cent, q, k=5, nprobe=nprobe)
+            )
+        assert rows, "probe returned no rows"
+        assert scanned == by_footer, (nprobe, scanned, by_footer, total)
 
 
 def test_probes_over_viewfs_match_local(spark, clustered_vecs, clustered_sketch,

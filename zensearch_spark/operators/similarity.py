@@ -270,7 +270,9 @@ def build_ann_index(
 
 def _probe_filter(by_table: dict[int, set[int]]) -> F.Column:
     """(table_id = t AND bucket IN probes_t) OR ... — pushed down to
-    the parquet reader, where row-group statistics do the pruning."""
+    the parquet reader, where row-group statistics do the pruning
+    (session.py's inFilterThreshold lets a batch's IN lists through
+    value by value)."""
     return functools.reduce(operator.or_, [
         (F.col("table_id") == t) & F.col("bucket").isin(sorted(b))
         for t, b in sorted(by_table.items())
@@ -733,11 +735,18 @@ def ann_topk_batch(
         frames = list(batches)
         if not frames:
             return
-        pdf = pd.concat(frames, ignore_index=True).sort_values(
-            ["query_id", "_raw", "vec_id"], ascending=[True, False, True]
-        ).drop_duplicates(["query_id", "vec_id"])
-        rank = pdf.groupby("query_id").cumcount()
-        yield pdf[rank < pdf["query_id"].map(ks)]
+        pdf = pd.concat(frames, ignore_index=True)
+        qid = pdf["query_id"].to_numpy()
+        vid = pdf["vec_id"].to_numpy(np.int64)
+        raw = pdf["_raw"].to_numpy()
+        for q in sorted(ks):
+            rows = qid == q
+            v, r = _topk_distinct(vid[rows], raw[rows], ks[q])
+            yield pd.DataFrame({
+                "query_id": np.full(len(v), q, dtype=np.int32),
+                "vec_id": v,
+                "_raw": r,
+            })
 
     return (
         spark.read.schema(ANN_INDEX_SCHEMA).parquet(index_path)

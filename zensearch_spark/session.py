@@ -127,19 +127,16 @@ def get_spark(
         # standard remedy for long-GC executors.
         .config("spark.network.timeout", "600s")
         .config("spark.executor.heartbeatInterval", "60s")
-        # Partition discovery above this many paths (Spark default 32)
-        # launches a Spark JOB to list directories — the job pays
-        # scheduling, not I/O (measured 2.2 s vs 0.33 s serial on a
-        # 1024-dir tree on local tmpfs). The ANN/IVF indexes are now a
-        # few sorted files with no directory tree, so only a wide
-        # partitionBy table (e.g. > 32 term_bucket dirs of the blocks
-        # table) reaches the threshold. Local FS listing is cheap, so
-        # keep it high; on object stores with very wide tables the
-        # parallel listing wins — set the env there.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_PAR_DISCOVERY_THRESHOLD", "4096"),
-        )
+        # An IN list longer than this reaches the parquet reader as one
+        # IN predicate, which footer min/max test only by the list's
+        # own [min, max]; up to it, as equalities tested value by
+        # value. The default of 10 is below a batch's union of ANN
+        # probe buckets (9 a table per query; one table holds 2^8),
+        # whose [min, max] spans nearly every row group, leaving the
+        # pruning to a dictionary-page read per row group. (Splitting
+        # the lists in the filter instead inlines their values into
+        # the generated code: 2 compiles a 4-query batch, +0.1-0.2 s.)
+        .config("spark.sql.parquet.pushdown.inFilterThreshold", "256")
         # MIN/MAX/COUNT aggs with no filter/group answer from parquet
         # footer statistics instead of scanning data pages — makes the
         # distributed dense-id invariant check (plans/index_build.py
